@@ -7,9 +7,10 @@ Prints ONE JSON line:
 Inputs: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) for the query
 battery; the end-to-end pipeline runs over a deterministic synthetic
 web-pages table (BASELINE.json input shape) generated in-session.
-Parallelism: local[$SPARK_GRAFT_CPUS] (default 32). Scaling-efficiency runs
-at two parallelism levels live in tools/scaling_bench.py (results recorded in
-BASELINE.md) so the per-round bench stays fast.
+Parallelism: local[$SPARK_GRAFT_CPUS] (default: the process's CPU affinity).
+Scaling-efficiency runs at two parallelism levels live in
+tools/scaling_bench.py (results recorded in BASELINE.md) so the per-round
+bench stays fast.
 """
 
 from __future__ import annotations

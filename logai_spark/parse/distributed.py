@@ -13,14 +13,19 @@ pass 2 (merge):  the tiny template set is collected and re-clustered on the
                  lexicographic — deterministic regardless of partition order)
                  into a fresh DrainTree. Result: the global template dict.
 pass 3 (match):  the merged tree is broadcast and every line is matched with
-                 frozen sim_th=1.0 semantics inside an Arrow pandas_udf, with
-                 an in-executor memoization cache (log lines repeat heavily).
+                 frozen sim_th=1.0 semantics by ``template_id_matcher``, a
+                 per-worker memoized line -> template id closure (log lines
+                 repeat heavily). It runs inside the pipeline's fused
+                 extract+match ``mapInPandas`` stage, or inside the
+                 ``match_templates`` Arrow pandas_udf for plain log lines.
 
 Parity definition (SURVEY.md §7.3): same template per line as the reference
 run in its own two-pass fit/match mode.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -49,8 +54,7 @@ def mine_templates(
     With ``return_stats=True`` also returns {"total_lines", "distinct_lines",
     "duplication"} measured by the SAME pass (each shard emits its
     distinct-line count as a null-template row — no extra action, no extra
-    scan). The duplication factor drives match-strategy auto-selection in
-    ``pipeline.run_pipeline``.
+    scan). ``pipeline.run_pipeline`` reports the duplication factor.
     """
     cfg = config or DrainConfig()
 
@@ -67,8 +71,7 @@ def mine_templates(
         # in-band stats row (template NULL): this shard's distinct-line
         # count, over the SAME rows the tree fit (str only) — counting
         # null/non-string rows here while total_lines excludes them would
-        # understate the duplication factor that drives match-strategy auto-
-        # selection
+        # understate the duplication factor
         n_fit = int(sum(1 for line in pdf[column] if isinstance(line, str)))
         return pd.DataFrame(
             {
@@ -182,17 +185,30 @@ def build_matcher(templates: list[tuple[str, int]], config: DrainConfig | None =
     Templates are inserted verbatim (no re-generalization) so match results
     depend only on the template set, not insertion interactions.
     """
-    cfg = config or DrainConfig()
-    tree = DrainTree(cfg)
+    tree = DrainTree(config or DrainConfig())
     for template, size in templates:
-        tokens = tuple(tree.tokenize(template))
-        from logai_spark.parse.drain import _Cluster
-
-        tree._next_id += 1
-        c = _Cluster(tokens, tree._next_id, size)
-        tree._put_cluster(c)
-        tree._insert_path(c)
+        tree.insert_template(template, size)
     return tree
+
+
+def template_id_matcher(
+    templates: list[tuple[str, int]], config: DrainConfig | None = None
+) -> Callable[[str], str | None]:
+    """Memoized ``line -> template_id`` over the frozen match tree; None when
+    the line matches no template. The memo lives as long as the closure, so
+    a caller that keeps one per Python worker matches each distinct line
+    once per worker."""
+    tree = build_matcher(templates, config)
+    memo: dict[str, str | None] = {}
+
+    def tid_of(line: str) -> str | None:
+        hit = memo.get(line)
+        if hit is None and line not in memo:
+            t = tree.match_line(line)
+            hit = memo[line] = template_id_of(t) if t is not None else None
+        return hit
+
+    return tid_of
 
 
 def match_templates(
@@ -215,34 +231,15 @@ def match_templates(
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast((templates, cfg))
 
-    import hashlib
-
     @F.pandas_udf(T.StringType())
     def _match_id(series: pd.Series) -> pd.Series:
         # build the matcher once per python worker, not per Arrow batch;
-        # the memo cache survives batches too (log lines repeat heavily)
+        # its memo survives batches too (log lines repeat heavily)
         state = _match_id.__dict__
-        if "tree" not in state:
-            state["tree"] = build_matcher(bc.value[0], bc.value[1])
-            state["cache"] = {}
-        tree = state["tree"]
-        cache: dict[str, str | None] = state["cache"]
-
-        def one(line):
-            if not isinstance(line, str):
-                return None
-            hit = cache.get(line)
-            if hit is None and line not in cache:
-                t = tree.match_line(line)
-                hit = (
-                    hashlib.md5(t.encode("utf-8")).hexdigest()[:16]
-                    if t is not None
-                    else None
-                )
-                cache[line] = hit
-            return hit
-
-        return series.map(one)
+        if "tid_of" not in state:
+            state["tid_of"] = template_id_matcher(bc.value[0], bc.value[1])
+        tid_of = state["tid_of"]
+        return series.map(lambda line: tid_of(line) if isinstance(line, str) else None)
 
     out = df.withColumn(id_col, _match_id(F.col(column)))
     if template_col is not None:
@@ -255,27 +252,6 @@ def match_templates(
         )
         out = out.withColumn(template_col, id_to_template[F.col(id_col)])
     return out
-
-
-def match_templates_by_join(
-    df: DataFrame,
-    column: str = "logline",
-    templates: list[tuple[str, int]] | None = None,
-    config: DrainConfig | None = None,
-    id_col: str = "template_id",
-) -> DataFrame:
-    """Match via global dedup + equi-join: each DISTINCT line crosses Python
-    exactly once; the fact table gets its template_id from a JVM shuffle join.
-
-    Per-worker memo caches (match_templates) redo work proportional to
-    worker count — with W workers each must match its own copy of the hot
-    lines. Here total Python work is exactly |distinct lines| regardless of
-    parallelism, so the stage scales with executors; the join is plain
-    hash-shuffle relational work Spark already scales.
-    """
-    distinct = df.select(column).distinct()
-    matched = match_templates(distinct, column, templates, config, template_col=None, id_col=id_col)
-    return df.join(matched, column, "left")
 
 
 def parse_df(

@@ -260,6 +260,16 @@ class DrainTree:
         c.size += size - 1
         return c
 
+    def insert_template(self, template: str, size: int = 1) -> _Cluster:
+        """Insert ``template`` verbatim as a new cluster: no similarity
+        search and no generalization, so a frozen match tree built this way
+        depends only on its template set, not on insertion interactions."""
+        self._next_id += 1
+        c = _Cluster(tuple(self.tokenize(template)), self._next_id, size)
+        self._put_cluster(c)
+        self._insert_path(c)
+        return c
+
     def fit(self, lines) -> "DrainTree":
         for line in lines:
             if isinstance(line, str):

@@ -6,13 +6,16 @@ This is the north_star flow (BASELINE.json): Common-Crawl-style pages
 1. extract   — text from html via the Arrow-vectorized reference extractor
                (byte-identical per url),
 2. explode   — text lines -> log records keyed by (url, line seq),
-3. parse     — distributed Drain (mine + broadcast match),
+3. parse     — distributed Drain: mine templates on a page sample, then
+               match every line in the same Python pass that extracts it
+               (``extract_parse``),
 4. enrich    — broadcast lang dimension join,
 5. route     — fan-out to per-template sinks (salted, manifested),
 6. aggregate — per-template x time-window counter vectors.
 
 Each stage is a lazy DataFrame transform; `run_pipeline` triggers two actions
-(the routed write and the aggregate collect/write). Stage boundaries can
+(the routed write and the aggregate collect/write), then audits the written
+files against the aggregate before the manifest lands. Stage boundaries can
 checkpoint via operators.route.checkpoint for idempotent resume.
 """
 
@@ -21,15 +24,22 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from logai_spark.operators.enrich import enrich
 from logai_spark.operators.features import counter_vector
 from logai_spark.operators.route import hot_key_buckets, route_to_sinks, write_manifest
-from logai_spark.parse.distributed import match_templates, mine_templates
+from logai_spark.parse.distributed import mine_templates, template_id_matcher
 from logai_spark.parse.drain import DrainConfig, template_id_of
-from logai_spark.sources.webpages import extract_text_udf
+from logai_spark.sources.webpages import (
+    extract_text_reference,
+    extract_text_sniffed,
+    extract_text_udf,
+)
 
 LANG_DIM = [
     ("en", "English", "latin"),
@@ -46,36 +56,7 @@ LANG_DIM = [
 class PipelineConfig:
     drain: DrainConfig = field(default_factory=DrainConfig)
     window: str = "1 hour"
-    skew_factor: float = 2.0  # keys above this x mean share get salted
     sample_fraction_for_mining: float = 1.0  # at 100TB you mine on a sample
-    # match pass: 'fused' = extract+match in one mapInPandas crossing with a
-    # per-worker memo (fastest measured: one Python crossing, no join
-    # shuffle); 'by_join' = extract, then global distinct-line match +
-    # equi-join (total Python work is |distinct lines| regardless of worker
-    # count); 'auto' = pick per-run from the mining pass's measured
-    # duplication factor (total/distinct lines — free: same pass, in-band
-    # stats rows) AND the session's parallelism.
-    #
-    # The round-3 duplication sweep (BASELINE.md §3.3, tools/
-    # match_crossover_bench.py) REFUTED the round-2 prediction that high
-    # duplication favors by_join: fused won every measured cell (dup 1.8 ->
-    # 2778, end-to-end AND match-only), because the per-worker memo makes
-    # fused's match cost vanish exactly when duplication is high, while
-    # by_join always pays two fact-table shuffles. by_join's real regime
-    # needs the per-worker re-match term (workers x distinct misses) to
-    # outgrow those shuffles — a worker count this single-JVM host cannot
-    # express. 'auto' therefore requires BOTH floors below.
-    match_strategy: str = "fused"
-    # auto picks by_join only when duplication >= auto_dup_threshold AND
-    # defaultParallelism >= auto_workers_floor. The workers floor is 4x the
-    # widest topology measured (32 workers: fused won at every duplication),
-    # i.e. by_join is only auto-selected on real multi-executor clusters
-    # where the measured evidence no longer bounds the re-match term.
-    auto_dup_threshold: float = 20.0
-    auto_workers_floor: int = 128
-    # cross-check the routed parquet row count against the aggregate-derived
-    # manifest totals before writing the manifest (fail loudly on mismatch)
-    verify_write: bool = True
     # WHATWG charset sniff (BOM > meta prescan > utf-8 trial > cp1252) in
     # front of html->text extraction. Off by default: the pinned per-url
     # byte-identity invariant is defined against the utf-8 reference
@@ -100,22 +81,7 @@ def extract_parse(
     once: each Arrow batch of pages is extracted, line-split, and matched in
     the same Python worker; only final line-level rows return to the JVM.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from logai_spark.parse.distributed import build_matcher
-    from logai_spark.sources.webpages import (
-        extract_text_reference,
-        extract_text_sniffed,
-    )
-
     extractor = extract_text_sniffed if charset_sniff else extract_text_reference
-
-    import hashlib
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     cfg = config or DrainConfig()
     bc = pages.sparkSession.sparkContext.broadcast((templates, cfg))
     # one output row per PAGE with line/template-id arrays: url/ts/lang cross
@@ -132,21 +98,7 @@ def extract_parse(
     )
 
     def _fused(batches):
-        tree = build_matcher(bc.value[0], bc.value[1])
-        memo: dict[str, str | None] = {}
-
-        def tid_of(line: str):
-            hit = memo.get(line)
-            if hit is None and line not in memo:
-                t = tree.match_line(line)
-                hit = (
-                    hashlib.md5(t.encode("utf-8")).hexdigest()[:16]
-                    if t is not None
-                    else None
-                )
-                memo[line] = hit
-            return hit
-
+        tid_of = template_id_matcher(bc.value[0], bc.value[1])
         for pdf in batches:
             lines_col, tids_col = [], []
             for html in pdf["html"]:
@@ -180,14 +132,11 @@ def extract_parse(
     )
 
 
-def pages_to_lines(pages: DataFrame, use_stored_text: bool = False) -> DataFrame:
-    """Stages 1+2: html -> text (Arrow UDF) -> one row per text line.
-
-    ``use_stored_text`` skips re-extraction when the text column is trusted
-    (e.g. pre-extracted upstream); default re-derives it from html so the
-    byte-identity invariant is exercised in the hot path.
-    """
-    text = F.col("text") if use_stored_text else extract_text_udf()(F.col("html"))
+def pages_to_lines(pages: DataFrame) -> DataFrame:
+    """Stages 1+2: html -> text (Arrow UDF) -> one row per text line. The
+    text is re-derived from html so the byte-identity invariant is exercised
+    in the hot path."""
+    text = extract_text_udf()(F.col("html"))
     lines = pages.select(
         "url",
         "warc_ts",
@@ -220,8 +169,6 @@ def verify_routed_write(
     rows, the single biggest non-scaling term in the 2-vs-8-core
     efficiency measurement). The lineage stays out of the driver JSON
     (bounded manifest at any file count)."""
-    import os as _os
-
     from logai_spark.operators.route import (
         LINEAGE_DIR,
         file_lineage,
@@ -231,7 +178,7 @@ def verify_routed_write(
     (
         footer_lineage_scan(spark, routed_path, partition_col)
         .write.mode("overwrite")
-        .parquet(_os.path.join(routed_path, LINEAGE_DIR))
+        .parquet(os.path.join(routed_path, LINEAGE_DIR))
     )
     written = int(
         file_lineage(spark, routed_path).agg(F.sum("n_rows")).collect()[0][0] or 0
@@ -249,7 +196,6 @@ def run_pipeline(
     pages: DataFrame,
     out_dir: str,
     config: PipelineConfig | None = None,
-    write_sinks: bool = True,
 ) -> dict:
     """Run the full flow; returns metrics {docs, lines, templates, manifest,
     agg_rows}. All counts come from the pipeline's own outputs so callers can
@@ -275,75 +221,39 @@ def run_pipeline(
         pages_to_lines(mine_pages), "logline", cfg.drain, return_stats=True
     )
     timings["mine"] = round(_time.perf_counter() - t0, 2)
-    strategy = cfg.match_strategy
-    if strategy == "auto":
-        # duplication measured on the mining input (the sample, when
-        # sampling — an under-estimate of true duplication, so auto errs
-        # toward fused, the measured-everywhere winner; see the config
-        # comment and BASELINE.md §3.3 for the refuted-crossover evidence).
-        workers = spark.sparkContext.defaultParallelism
-        strategy = (
-            "by_join"
-            if (
-                mine_stats["duplication"] >= cfg.auto_dup_threshold
-                and workers >= cfg.auto_workers_floor
-            )
-            else "fused"
-        )
-    if strategy == "by_join":
-        from logai_spark.parse.distributed import match_templates_by_join
-
-        parsed = match_templates_by_join(
-            pages_to_lines(pages), "logline", templates, cfg.drain
-        )
-    else:
-        parsed = extract_parse(
-            pages, templates, cfg.drain, charset_sniff=cfg.charset_sniff
-        )
-
+    # one match pass: fused beat distinct-line match + join at every duplication (BASELINE.md §3.3)
+    parsed = extract_parse(pages, templates, cfg.drain, charset_sniff=cfg.charset_sniff)
     enriched = enrich(parsed, lang_dimension(spark), "lang", select=["lang_name", "script"])
 
     metrics: dict = {
         "templates": len(templates),
         "templates_list": templates,
-        "match_strategy": strategy,
         "duplication": round(mine_stats["duplication"], 2),
     }
-    if write_sinks:
-        # The parsed+enriched line table is consumed twice (routed write +
-        # windowed aggregate). Persisting it means the expensive fused
-        # extract+match python stage runs ONCE; the aggregate then reads
-        # executor-local cached blocks (memory, spilling to executor disk)
-        # instead of re-scanning the routed files from shared storage —
-        # one less full-table IO round trip, and no driver-side file
-        # listing of N sink directories.
-        from pyspark import StorageLevel
-
-        enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-        # skew handling: template sizes from the mining pass tell us which
-        # sinks are hot; only those get salted across writer tasks
-        sizes = {template_id_of(t): s for t, s in templates}
-        hot = hot_key_buckets(
-            sizes,
-            parallelism=spark.sparkContext.defaultParallelism,
-            skew_factor=cfg.skew_factor,
-        )
-        routed_path = os.path.join(out_dir, "routed")
-        t0 = _time.perf_counter()
-        manifest = route_to_sinks(
-            enriched,
-            routed_path,
-            "template_id",
-            hot_buckets=hot,
-            stage="route",
-            extra_meta={"hot_sinks": len(hot)},
-            compute_counts=False,
-        )
-        timings["route_write"] = round(_time.perf_counter() - t0, 2)
-        agg_src = enriched
-    else:
-        agg_src = enriched.persist()
-        manifest = {"stage": "route", "path": None}
+    # The parsed+enriched line table is consumed twice (routed write +
+    # windowed aggregate). Persisting it means the expensive fused
+    # extract+match python stage runs ONCE; the aggregate then reads
+    # executor-local cached blocks (memory, spilling to executor disk)
+    # instead of re-scanning the routed files from shared storage —
+    # one less full-table IO round trip, and no driver-side file
+    # listing of N sink directories.
+    enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
+    # skew handling: template sizes from the mining pass tell us which
+    # sinks are hot; only those get salted across writer tasks
+    sizes = {template_id_of(t): s for t, s in templates}
+    hot = hot_key_buckets(sizes, parallelism=spark.sparkContext.defaultParallelism)
+    routed_path = os.path.join(out_dir, "routed")
+    t0 = _time.perf_counter()
+    manifest = route_to_sinks(
+        enriched,
+        routed_path,
+        "template_id",
+        hot_buckets=hot,
+        stage="route",
+        extra_meta={"hot_sinks": len(hot)},
+        compute_counts=False,
+    )
+    timings["route_write"] = round(_time.perf_counter() - t0, 2)
 
     # windowed aggregate from the persisted line table; per-sink manifest
     # counts roll up from the aggregate instead of a second full scan.
@@ -354,7 +264,7 @@ def run_pipeline(
     # bounded routing fan-out. The rollup is executor-side partial-agg over
     # the persisted agg blocks; the driver only ever sees #sinks rows.
     t0 = _time.perf_counter()
-    agg = counter_vector(agg_src, ["template_id", "lang"], "warc_ts", cfg.window).persist()
+    agg = counter_vector(enriched, ["template_id", "lang"], "warc_ts", cfg.window).persist()
     agg.write.mode("overwrite").parquet(os.path.join(out_dir, "agg"))
     per_sink = (
         agg.groupBy("template_id")
@@ -371,13 +281,11 @@ def run_pipeline(
     manifest["n_sinks"] = len(sink_counts)
     metrics["agg_rows"] = int(sum(r["_agg_rows"] for r in per_sink))
     timings["aggregate"] = round(_time.perf_counter() - t0, 2)
+    t0 = _time.perf_counter()
+    verify_routed_write(spark, routed_path, manifest["total_rows"])
+    timings["verify"] = round(_time.perf_counter() - t0, 2)
     metrics["timings"] = timings
-    if write_sinks:
-        if cfg.verify_write:
-            t0 = _time.perf_counter()
-            verify_routed_write(spark, routed_path, manifest["total_rows"])
-            timings["verify_write"] = round(_time.perf_counter() - t0, 2)
-        write_manifest(os.path.join(out_dir, "routed"), manifest)
+    write_manifest(routed_path, manifest)
     enriched.unpersist()
     metrics["manifest"] = manifest
     metrics["lines"] = manifest["total_rows"]

@@ -348,7 +348,16 @@ def _content_decode(body: bytes, encoding: str) -> bytes:
     enc = encoding.strip().lower()
     try:
         if enc in ("gzip", "x-gzip"):
-            return zlib.decompress(body, 16 + zlib.MAX_WBITS)
+            # a gzip stream may hold several members: decode each in turn
+            # from the bytes the previous member left unused
+            out, rest = [], body
+            while rest:
+                d = zlib.decompressobj(16 + zlib.MAX_WBITS)
+                out.append(d.decompress(rest))
+                if not d.eof:
+                    raise zlib.error("truncated gzip member")
+                rest = d.unused_data
+            return b"".join(out)
         if enc == "deflate":
             try:
                 return zlib.decompress(body)  # zlib-wrapped (the spec)

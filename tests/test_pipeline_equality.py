@@ -109,66 +109,27 @@ def test_windowed_aggregate_equality(spark, pipeline_out, oracle):
     )
 
 
-def test_match_strategy_equivalence(spark, tmp_path):
-    """'fused' (per-worker memo match) and 'by_join' (global distinct-line
-    match + equi-join) must produce identical routed rows — they are two
-    physical plans for the same logical match pass."""
-    from pyspark.sql import functions as F
+def test_fused_and_udf_match_paths_agree(spark):
+    """The two match paths left — the pipeline's fused extract+match stage
+    and the standalone ``match_templates`` UDF over ``pages_to_lines`` —
+    give identical (url, seq, logline, template_id) rows. Templates are
+    mined on a 10% page sample so some lines dead-letter (null id). The
+    default corpus mostly misses the per-worker memo; the 40-line pool
+    makes nearly every lookup a memo hit."""
+    from logai_spark.parse.distributed import match_templates, mine_templates
+    from logai_spark.pipeline import extract_parse, pages_to_lines
 
-    from logai_spark.pipeline import PipelineConfig, run_pipeline
-    from logai_spark.sources.webpages import synth_webpages
-
-    pages = synth_webpages(spark, 300)
-    m1 = run_pipeline(
-        spark, pages, str(tmp_path / "fused"),
-        PipelineConfig(match_strategy="fused"),
-    )
-    m2 = run_pipeline(
-        spark, pages, str(tmp_path / "by_join"),
-        PipelineConfig(match_strategy="by_join"),
-    )
-    assert m1["lines"] == m2["lines"]
-    assert m1["manifest"]["sinks"] == m2["manifest"]["sinks"]
-    a = spark.read.parquet(str(tmp_path / "fused" / "routed")).select(
-        "url", "seq", "logline", "template_id"
-    )
-    b = spark.read.parquet(str(tmp_path / "by_join" / "routed")).select(
-        "url", "seq", "logline", "template_id"
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_match_strategy_auto_selection(spark, tmp_path):
-    """'auto' needs BOTH floors (measured duplication AND worker count —
-    the round-3 sweep showed fused winning at every duplication on narrow
-    topologies, BASELINE.md §3.3): at the default workers floor this host
-    always picks fused; with the floor lowered to this session's
-    parallelism, a high-duplication corpus flips to by_join."""
-    from logai_spark.pipeline import PipelineConfig, run_pipeline
-    from logai_spark.sources.webpages import synth_webpages
-
-    cfg = PipelineConfig(match_strategy="auto", auto_dup_threshold=20.0)
-    low = run_pipeline(
-        spark, synth_webpages(spark, 300), str(tmp_path / "low"), cfg
-    )
-    assert low["match_strategy"] == "fused"
-    assert low["duplication"] < 20.0
-    # ~6300 lines drawn from a 40-line pool -> duplication far above the
-    # threshold, but the topology floor keeps fused on this host
-    high_pages = synth_webpages(spark, 300, line_pool=40)
-    high = run_pipeline(spark, high_pages, str(tmp_path / "high"), cfg)
-    assert high["match_strategy"] == "fused"
-    assert high["duplication"] > 20.0
-    # cluster-topology regime (floor at this session's parallelism):
-    # high duplication now selects by_join
-    cfg_wide = PipelineConfig(
-        match_strategy="auto", auto_dup_threshold=20.0,
-        auto_workers_floor=spark.sparkContext.defaultParallelism,
-    )
-    wide = run_pipeline(spark, high_pages, str(tmp_path / "wide"), cfg_wide)
-    assert wide["match_strategy"] == "by_join"
-    # the stats are exact, not sampled: totals agree across strategies
-    assert wide["lines"] == high["lines"] > 0 and low["lines"] > 0
+    cols = ["url", "seq", "logline", "template_id"]
+    for line_pool in (None, 40):
+        pages = synth_webpages(spark, 300, line_pool=line_pool)
+        sample = pages.filter(F.pmod(F.xxhash64("url"), 10) == 0)
+        templates = mine_templates(pages_to_lines(sample))
+        fused = extract_parse(pages, templates).select(*cols)
+        udf = match_templates(pages_to_lines(pages), templates=templates).select(*cols)
+        assert fused.count() == udf.count() > 0
+        assert fused.filter(F.col("template_id").isNotNull()).count() > 0
+        assert fused.exceptAll(udf).count() == 0
+        assert udf.exceptAll(fused).count() == 0
 
 
 def test_mine_stats_duplication(spark):
@@ -186,17 +147,13 @@ def test_mine_stats_duplication(spark):
     assert all(t is not None for t, _ in tpls)
 
 
-def test_verify_write_gate_fails_on_mismatch(spark, tmp_path):
+def test_verify_routed_write_gate_fails_on_mismatch(spark, tmp_path):
     """The manifest audit gate: corrupt the routed output after the write and
     the consistency check must raise instead of certifying it."""
     import glob
-    import os
-
-    import pytest
 
     from logai_spark.operators.route import MANIFEST
-    from logai_spark.pipeline import PipelineConfig, run_pipeline, verify_routed_write
-    from logai_spark.sources.webpages import synth_webpages
+    from logai_spark.pipeline import verify_routed_write
 
     pages = synth_webpages(spark, 100)
     out = str(tmp_path / "ok")

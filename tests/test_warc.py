@@ -187,16 +187,19 @@ def test_wet_manifest_is_lazy_until_action(spark, tmp_path):
 
 def test_warc_gzip_content_encoding_decoded(spark, tmp_path):
     """An archived response whose entity body is Content-Encoding: gzip
-    wire bytes decodes transparently (what warcio consumers do); corrupt
-    streams keep the raw capture."""
+    wire bytes decodes transparently (what warcio consumers do), every
+    member of a multi-member stream included; corrupt streams keep the raw
+    capture."""
     html = b"<html>compressed page body</html>"
     p = tmp_path / "seg.warc"
     p.write_bytes(warc_bytes(
-        [("http://gz.io/", "2024-01-01T00:00:00Z", gzip.compress(html))],
+        [("http://gz.io/", "2024-01-01T00:00:00Z", gzip.compress(html)),
+         ("http://gz2.io/", "2024-01-01T00:00:00Z",
+          gzip.compress(html[:10]) + gzip.compress(html[10:]))],
         extra_http_headers=b"Content-Encoding: gzip\r\n",
     ))
-    (row,) = read_warc(spark, [str(p)]).collect()
-    assert bytes(row.html) == html
+    rows = read_warc(spark, [str(p)]).orderBy("url").collect()
+    assert [bytes(r.html) for r in rows] == [html, html]
 
     # corrupt gzip -> raw bytes survive, never lost
     p2 = tmp_path / "bad.warc"

@@ -72,7 +72,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from logai_spark.session import get_spark
 
-    spark = get_spark("oracle_check", cpus=8)
+    spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
